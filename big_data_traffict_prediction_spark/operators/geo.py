@@ -495,9 +495,10 @@ def stored_zone_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import connected_components
 
     def _src(f) -> str:
-        # stable fallback for source-less deployments (pyc/zipimport) —
-        # same contract as registry._fingerprint; _CC_STORE_VERSION is
-        # the manual invalidation lever in that mode
+        # stable fallback for source-less deployments (pyc/zipimport):
+        # the qualified name, not repr(f), which embeds a memory
+        # address; _CC_STORE_VERSION is the manual invalidation lever
+        # in that mode
         try:
             return inspect.getsource(f)
         except (OSError, TypeError):

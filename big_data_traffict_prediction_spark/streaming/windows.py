@@ -56,9 +56,10 @@ WATERMARK = "30 minutes"
 # (no ``n_rows`` passed) fall back to the legacy constant below, so a
 # restarted checkpoint of such a stream keeps a stable count.
 # A VALID SPARK_STREAM_STATE_PARTITIONS still overrides everything
-# (clamped by the session value, as before); empty/whitespace or
-# malformed values are treated as unset — derivation engages — never
-# as a silent constant pin and never an import crash.
+# (clamped by the session value, as before); empty/whitespace,
+# non-integer or non-positive values are treated as unset —
+# derivation engages — never as a silent constant pin and never an
+# import crash.
 
 
 def _env_int(name: str) -> int | None:
@@ -66,9 +67,10 @@ def _env_int(name: str) -> int | None:
     if raw is None or not raw.strip():
         return None
     try:
-        return max(1, int(raw))
+        value = int(raw)
     except ValueError:
         return None
+    return value if value > 0 else None
 
 
 _STREAM_STATE_OVERRIDE = _env_int("SPARK_STREAM_STATE_PARTITIONS")

@@ -47,12 +47,16 @@ def test_readme_totals_match_registry():
     )
 
 
-def test_fingerprint_snapshot_covers_registry():
-    """The committed _fingerprints.json must track every registered query
-    (refresh_fingerprints drops unregistered names and adds new ones, so
-    a mismatch means the round-start refresh was skipped)."""
+def test_registry_order_is_registration_order(tmp_path, monkeypatch):
+    """queries() / oracle_sql() list names in registration order, and
+    no result file in the working directory can reorder them."""
     registry._load_modules()
-    snap = registry._fingerprint_snapshot()
-    assert set(snap) == set(registry._REGISTRY), (
-        "run scripts/refresh_fingerprints.py at round start"
+    names = list(registry._REGISTRY)
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        '{"%s": {"err": "boom"}, "%s": {"hash_match": true}}' % (names[-1], names[0])
     )
+    monkeypatch.chdir(tmp_path)
+    assert list(registry.all_queries()) == names
+    assert list(registry.all_oracles()) == [
+        n for n in names if registry._REGISTRY[n].oracle is not None
+    ]

@@ -299,61 +299,78 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     assert got and got == batch
 
 
-def test_congestion_episodes_v2_twin_matches_v1(spark, sf_dir):
-    """The transformWithStateInPandas (arbitrary-state v2) episode
-    processor emits the same closed episodes as the registered
-    applyInPandasWithState form. The v2 state server speaks protobuf;
-    conftest vendors the google-cloud-sdk pure-Python runtime (see
-    tests/_pb_shim/) when no real install exists, so this runs here
-    too — the skip now only fires with no runtime found at all."""
-    import pytest
+def _episode_rows(rows):
+    """(minute, id, new_count) triples -> a detection chunk as the
+    state function receives it."""
+    import pandas as pd
 
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("no protobuf runtime found (real or vendored)")
-
-    import tempfile
-    import uuid
-
-    from big_data_traffict_prediction_spark.streaming import (
-        simulate,
-        state,
-        windows,
-    )
-
-    base = tempfile.mkdtemp(prefix="tws_episodes_")
-    stage = simulate.stage_stream_dir(spark, sf_dir, f"{base}/stage", n_chunks=4)
-
-    def drain(builder):
-        return {
-            (r.camera_id, r.episode_start, r.episode_end, r.n_obs, r.peak, r.total)
-            for r in windows.run_to_memory(
-                spark,
-                builder(simulate.read_stream(spark, stage)),
-                f"tws_{uuid.uuid4().hex[:8]}",
-                f"{base}/ckpt_{uuid.uuid4().hex[:8]}",
-            ).collect()
+    return pd.DataFrame(
+        {
+            "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=m) for m, _, _ in rows],
+            "id": [i for _, i, _ in rows],
+            "new_count": [n for _, _, n in rows],
         }
-
-    v1 = drain(state.congestion_episodes)
-    # transformWithStateInPandas keys state by column family, which the
-    # default HDFSBackedStateStoreProvider rejects — RocksDB (bundled
-    # with Spark 4) is the supported provider for arbitrary state v2
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    try:
-        v2 = drain(state.congestion_episodes_v2)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    assert v1 and v1 == v2
+
+
+def _us(minute):
+    import pandas as pd
+
+    return (pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=minute)).value // 1000
+
+
+def test_fold_episodes_carries_open_episode_across_batches():
+    """An episode still open at the end of one micro-batch is extended
+    and closed by the next, with n_obs / peak / total summed across the
+    seam. Spark-free."""
+    cur, closed = state._fold_episodes(
+        None, iter([_episode_rows([(0, 1, 10), (1, 2, 400), (2, 3, 350)])])
+    )
+    assert closed == []
+    assert cur == (_us(1), _us(2), 2, 400, 750)
+    cur, closed = state._fold_episodes(
+        cur, iter([_episode_rows([(3, 4, 500), (4, 5, 10)])])
+    )
+    assert cur is None
+    assert closed == [(_us(1), _us(3), 3, 500, 1250)]
+
+
+def test_fold_episodes_sorts_chunks_handed_over_out_of_order():
+    """Arrow chunk order within a group is not guaranteed: chunks (and
+    rows inside them) handed over in reverse (ts, id) order must fold
+    exactly like in-order chunks. The ts tie at minute 2 is broken by
+    id, so the low row (id 4) closes the episode before id 5 reopens
+    it. Spark-free."""
+    rows = [(0, 1, 300), (1, 2, 450), (2, 4, 20), (2, 5, 310), (3, 6, 0),
+            (4, 7, 900), (5, 8, 305)]
+    start = (_us(-1), _us(-1), 1, 320, 320)
+    want = state._fold_episodes(start, iter([_episode_rows(rows)]))
+    chunks = [_episode_rows(rows[i:i + 3][::-1]) for i in range(0, len(rows), 3)]
+    got = state._fold_episodes(start, iter(chunks[::-1]))
+    assert got == want
+    assert want == (
+        (_us(4), _us(5), 2, 900, 1205),
+        [(_us(-1), _us(1), 3, 450, 1070), (_us(2), _us(2), 1, 310, 310)],
+    )
+
+
+def test_fold_episodes_all_high_batch_keeps_episode_open():
+    """A batch with no below-threshold row closes nothing: it emits no
+    episode and only extends the open one. Spark-free."""
+    cur, closed = state._fold_episodes(
+        None, iter([_episode_rows([(0, 1, 300), (1, 2, 700)])])
+    )
+    assert (cur, closed) == ((_us(0), _us(1), 2, 700, 1000), [])
+    cur, closed = state._fold_episodes(cur, iter([_episode_rows([(2, 3, 301)])]))
+    assert (cur, closed) == ((_us(0), _us(2), 3, 700, 1301), [])
+
+
+def test_env_int_treats_non_positive_as_unset(monkeypatch):
+    """Malformed partition knobs mean "unset" (derivation engages),
+    never a 1-partition pin. Spark-free."""
+    for raw, want in (("0", None), ("-3", None), ("5", 5), (" ", None), ("x", None)):
+        monkeypatch.setenv("SPARK_GRAFT_TEST_ENV_INT", raw)
+        assert windows._env_int("SPARK_GRAFT_TEST_ENV_INT") == want, raw
 
 
 def test_frame_stream_sink_round_trips(spark, sf_dir, tmp_path):
