@@ -17,9 +17,12 @@ Spark plan and the DuckDB oracle can never drift apart silently.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
 from .schemas import TABLE_NAMES, TESTDATA_SCHEMAS
@@ -29,39 +32,65 @@ CAR_EVENT_TYPES = ("click", "view")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Schema-normalizing parquet read.
+    """Read ``<sf_dir>/<name>.parquet`` with the schema
+    ``TESTDATA_SCHEMAS[name]``, so building the read runs no Spark job.
 
-    The testdata writes TIMESTAMP(NANOS) parquet, which Spark's vectorized
-    reader rejects; we read nanos as long (`nanosAsLong`) and truncate to
-    microsecond timestamps — the exact semantics DuckDB applies, so the
-    oracle comparison sees identical instants.
+    Only the physical encoding of timestamp columns varies between
+    files; one footer read on the driver tells which it is:
+
+    * ``TIMESTAMP(NANOS)``, which Spark's reader rejects, is read as
+      long (``nanosAsLong``) and truncated to microseconds with integer
+      ``div 1000``, the semantics DuckDB applies;
+    * ``TIMESTAMP(MICROS)`` or ``(MILLIS)``, UTC-adjusted or not, and
+      INT96 are read as ``TimestampType``. The session time zone is
+      pinned to UTC, so a naive column reads as the instants DuckDB
+      reports for the same file.
+
+    A schema column missing from the file raises ``ValueError``: with
+    an explicit schema Spark would fill it with NULLs instead.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     pin_session_conf(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for field in TESTDATA_SCHEMAS[name].fields:
-        if not isinstance(field.dataType, T.TimestampType):
-            continue
-        actual = df.schema[field.name].dataType
-        if isinstance(actual, T.LongType):
-            # integer `div`, not `/1000`: a double can't hold int64 nanos
-            df = df.withColumn(
-                field.name,
-                F.timestamp_micros(F.expr(f"`{field.name}` div 1000")),
-            )
-        elif isinstance(actual, T.TimestampNTZType):
-            # parquet timestamp[us] with isAdjustedToUTC=false reads as
-            # TIMESTAMP_NTZ under Spark 4's NTZ inference; the session tz
-            # is pinned UTC (session.py), so this cast is instant-exact
-            # and matches DuckDB's naive reading of the same file.
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    path = f"{sf_dir}/{name}.parquet"
+    stored = _footer_schema(path)
+    schema = TESTDATA_SCHEMAS[name]
+    missing = [f.name for f in schema.fields if f.name not in stored.names]
+    if missing:
+        raise ValueError(f"table {name!r} at {path} has no column(s) {missing}")
+    nanos = [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.TimestampType)
+        and _is_nanos(stored.field(f.name).type)
+    ]
+    read_schema = T.StructType(
+        [T.StructField(f.name, T.LongType()) if f.name in nanos else f
+         for f in schema.fields]
+    )
+    df = spark.read.schema(read_schema).parquet(path)
+    for c in nanos:
+        # integer `div`, not `/1000`: a double can't hold int64 nanos
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+def _is_nanos(t: pa.DataType) -> bool:
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
+def _footer_schema(path: str) -> pa.Schema:
+    """Arrow schema from the footer of ``path``, or of the first data
+    file when ``path`` is a directory as Spark writes one."""
+    if os.path.isdir(path):
+        data = [f for f in sorted(os.listdir(path)) if not f.startswith(("_", "."))]
+        if not data:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        path = os.path.join(path, data[0])
+    # pyarrow reports INT96 as nanos by default; INT96 is not TIMESTAMP(NANOS)
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+        return f.schema_arrow
 
 
 def traffic_history(spark: SparkSession, sf_dir: str) -> DataFrame:

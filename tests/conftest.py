@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -16,6 +17,30 @@ def spark():
                   driver_memory="8g")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def build_jobs(spark):
+    """``build_jobs(fn) -> (fn(), n)``: ``n`` is the number of Spark jobs
+    ``fn`` fired, counted in a job group of its own."""
+    sc = spark.sparkContext
+    ids = itertools.count()
+
+    def run(fn):
+        group = f"build-jobs-{next(ids)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # job-start events reach the status tracker through the
+        # asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

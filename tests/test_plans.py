@@ -103,7 +103,69 @@ def test_no_unpartitioned_ordered_window_anywhere(spark, sf_dir):
         )
 
 
-def test_all_registered_outputs_are_scalar_columns(spark, sf_dir):
+# Batch queries that still run Spark jobs while their DataFrame is
+# built, each with its reason; every other batch query builds a pure
+# plan. A lazy localCheckpoint counts: under AQE, cutting the RDD runs
+# the shuffle and broadcast stages below the cut.
+_EAGER = "eager localCheckpoint"
+_LAZY = "lazy localCheckpoint (AQE runs the stages below the cut)"
+_CKPT_DRIVER = "localCheckpoint, plus driver collect/count of bounded state"
+_COLLECT = "driver collect of a bounded training sample"
+# memoized per application (ml/forecast.py), so only the first build fits
+_FIT = "MLlib fit"
+JOBS_AT_BUILD = {
+    "q_profile_correlation": _LAZY,
+    "q_part_affinity": _EAGER,
+    "q_camera_quartiles": _LAZY,
+    "q_skyline_pareto": _LAZY,
+    "q_volume_percentile_rank": _LAZY,
+    "q_similar_days": _EAGER,
+    "q_rfm_segments": _LAZY,
+    "q_audience_overlap": _EAGER,
+    "q_tfidf_top_terms": _EAGER,
+    "q_vocab_coverage": _LAZY,
+    "q_pmi_collocations": _EAGER,
+    "q_rolling_origin_eval": _EAGER,
+    "q_camera_neighbors": _EAGER,
+    "q_cc_delta": _CKPT_DRIVER,
+    "q_dedup_sorted_neighborhood": _LAZY,
+    "q_dedup_minhash_lsh": _LAZY,
+    "q_dedup_clusters": _CKPT_DRIVER,
+    "q_dedup_recall_eval": _LAZY,
+    "q_graph_triangles": _EAGER,
+    "q_pagerank_parts": _EAGER,
+    "q_kcore_parts": _CKPT_DRIVER,
+    "q_lpa_communities": _CKPT_DRIVER,
+    "q_hll_distinct": _EAGER,
+    "q_mixture_sample": _EAGER,
+    "q_training_manifest": _EAGER,
+    "q_quality_percentile_filter": _LAZY,
+    "q_weighted_sample": _EAGER,
+    "q_set_overlap_sketch": _EAGER,
+    "q_hll_rolling_distinct": _EAGER,
+    "q_analyze_table": _EAGER,
+    "q_clustering_depth": _LAZY,
+    "q_sample_histogram": _LAZY,
+    "q_selectivity_equality": _LAZY,
+    "q_t_closeness": _LAZY,
+    "q_mcv_merge": _LAZY,
+    "q_bloom_skipping_eval": _LAZY,
+    "q_tpch_q11": _LAZY,
+    "q_join_size_histogram": _LAZY,
+    "q_scd2_apply": _LAZY,
+    "q_bpe_merges": _CKPT_DRIVER,
+    "q_bpe_token_counts": _CKPT_DRIVER,
+    "q_ann_ivf_delta": _EAGER,
+    "q_ann_pq": _COLLECT,
+    "q_ann_pq_fixed": _CKPT_DRIVER,
+    "q_ann_ivf_pq_fixed": _CKPT_DRIVER,
+    "q_ann_srp_lsh": _EAGER,
+    "q_ml_forecast": _FIT,
+    "q_ml_forecast_eval": _FIT,
+}
+
+
+def test_all_registered_outputs_are_scalar_columns(spark, sf_dir, build_jobs):
     """Registry-wide harness-compat guard: no registered query may
     return a top-level ArrayType/MapType/StructType column. The
     correctness harness canonicalizes results by sorting RAW cells in
@@ -113,21 +175,36 @@ def test_all_registered_outputs_are_scalar_columns(spark, sf_dir):
     serialize to a deterministic scalar (comma-joined fixed-point
     string, to_json) in the returned frame. Batch queries only: the
     streaming queries execute eagerly on build, and their (static)
-    result schemas are pinned scalar-only by their own tests."""
+    result schemas are pinned scalar-only by their own tests.
+
+    The same sweep pins the lazy contract: each build is counted in a
+    job group of its own, and the queries that fire jobs must be
+    exactly ``JOBS_AT_BUILD``."""
     from pyspark.sql import types as T
 
     from big_data_traffict_prediction_spark import registry
 
     offenders = []
+    jobs_at_build = {}
     for name, fn in registry.all_queries().items():
         if name.startswith("q_stream_"):
             continue
-        for field in fn(spark, sf_dir).schema.fields:
+        df, jobs = build_jobs(lambda: fn(spark, sf_dir))
+        if jobs:
+            jobs_at_build[name] = jobs
+        for field in df.schema.fields:
             if isinstance(
                 field.dataType, (T.ArrayType, T.MapType, T.StructType)
             ):
                 offenders.append(f"{name}.{field.name}: {field.dataType}")
     assert not offenders, f"non-scalar output columns: {offenders}"
+    unlisted = {n: j for n, j in jobs_at_build.items() if n not in JOBS_AT_BUILD}
+    assert not unlisted, f"queries firing Spark jobs at build: {unlisted}"
+    now_lazy = sorted(
+        n for n, why in JOBS_AT_BUILD.items()
+        if n not in jobs_at_build and why != _FIT
+    )
+    assert not now_lazy, f"listed in JOBS_AT_BUILD but build lazily: {now_lazy}"
 
 
 def test_bucket_series_dense_broadcasts_agg_side(spark, sf_dir):
