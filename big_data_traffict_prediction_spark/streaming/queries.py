@@ -121,10 +121,7 @@ def q_stream_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.stateful_dedup(simulate.read_stream(spark, stage)),
         f"q_stream_dedup_{uuid.uuid4().hex[:8]}",
         f"{base}/ckpt",
-        # NO state_rows: applyInPandasWithState runs a per-row PYTHON
-        # kernel, so the partition count is a Python-parallelism knob,
-        # not a state-sizing knob — the sized cap (2 at sf0.1) measured
-        # the congestion twin ~3x slower than the constant (r14 A/B)
+        state_rows=simulate.staged_rows(stage),
     )
     shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "id")
@@ -635,7 +632,10 @@ def q_stream_congestion_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-camera congestion-episode detection: keyed state holds the
     open episode (start/end/n/peak/total); a below-threshold
     observation closes and emits it, via `applyInPandasWithState`
-    over the one fold `state._fold_episodes`.
+    over the one fold `state._fold_episodes` (column operations on each
+    sorted micro-batch). Its state partitions, and so its Python tasks
+    per micro-batch, are sized by the staged input rows like every
+    other drain's.
 
     Hash-checked: on the time-ordered replay, closed episodes are
     exactly the consecutive-high gap-islands that have a later
@@ -648,7 +648,7 @@ def q_stream_congestion_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.congestion_episodes(simulate.read_stream(spark, stage)),
         f"q_stream_episodes_{uuid.uuid4().hex[:8]}",
         f"{base}/ckpt",
-        # NO state_rows: per-row Python kernel — see q_stream_iou_dedup
+        state_rows=simulate.staged_rows(stage),
     )
     shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "episode_start")

@@ -13,7 +13,9 @@ exactly-once.
 
 Rows within each micro-batch are processed in (ts, id) order, so the
 suppressed-set matches the batch operator q_iou_dedup exactly — that
-equivalence is pinned by tests/test_streaming.py.
+equivalence is pinned by tests/test_streaming.py. Both state functions
+here are column operations on the sorted micro-batch frame; their
+per-row reference loops live in the tests.
 """
 
 from __future__ import annotations
@@ -21,9 +23,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -54,64 +58,92 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _iou(a: tuple[int, int, int, int], b: tuple[int, int, int, int]) -> float:
-    ix = max(0, min(a[2], b[2]) - max(a[0], b[0]))
-    iy = max(0, min(a[3], b[3]) - max(a[1], b[1]))
+_BOX = ("x1", "y1", "x2", "y2")
+
+
+def _iou(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise IoU of two (n, 4) int64 arrays of (x1, y1, x2, y2)
+    boxes; 0.0 where the union is empty."""
+    ix = np.maximum(0, np.minimum(a[:, 2], b[:, 2]) - np.maximum(a[:, 0], b[:, 0]))
+    iy = np.maximum(0, np.minimum(a[:, 3], b[:, 3]) - np.maximum(a[:, 1], b[:, 1]))
     inter = ix * iy
-    union = (a[2] - a[0]) * (a[3] - a[1]) + (b[2] - b[0]) * (b[3] - b[1]) - inter
-    return inter / union if union > 0 else 0.0
+    union = (a[:, 2] - a[:, 0]) * (a[:, 3] - a[:, 1]) + (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1]) - inter
+    return np.divide(inter, union, out=np.zeros(len(a)), where=union > 0)
+
+
+def _sorted_batch(pdfs: Iterator[pd.DataFrame], names: tuple[str, ...]) -> dict[str, np.ndarray] | None:
+    """Columns ``ts``, ``id`` and ``names`` of one group's whole
+    micro-batch as numpy arrays, sorted ONCE by (ts, id): Arrow
+    delivers a group as multiple chunks in no guaranteed order, so
+    per-chunk sorting would pick the wrong predecessor across chunk
+    seams. None when the state function fires without rows."""
+    chunks = [c for c in pdfs if len(c)]
+    if not chunks:
+        return None
+    batch = {n: np.concatenate([c[n].to_numpy() for c in chunks]) for n in ("ts", "id", *names)}
+    order = np.lexsort((batch["id"], batch["ts"]))
+    return {n: col[order] for n, col in batch.items()}
 
 
 def dedup_fn(
     key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-camera state function (vectorized per micro-batch)."""
+    """Per-camera state function, one column pass per micro-batch.
+
+    Every row becomes the next row's ``prev``, suppressed or not, so
+    row i is compared with row i-1 and row 0 with the state's box (the
+    empty box (0, 0, 0, 0) when there is none: its IoU with any box is
+    0); the accumulator is the state's value plus a cumsum of the
+    unsuppressed counts."""
     (camera_id,) = key
+    prev, accumulated, has_prev = [0, 0, 0, 0], 0, False
     if state.exists:
         x1, y1, x2, y2, accumulated, has_prev = state.get
-        prev: tuple[int, int, int, int] | None = (x1, y1, x2, y2) if has_prev else None
-    else:
-        prev, accumulated = None, 0
+        if has_prev:
+            prev = [x1, y1, x2, y2]
 
-    out: list[dict[str, Any]] = []
-    # Buffer the whole micro-batch and sort ONCE: Arrow chunk order
-    # within a group is not guaranteed, and per-chunk sorting would
-    # dedup against the wrong "previous" frame across chunk seams.
-    chunks = list(pdfs)
-    batch = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-    if len(batch):
-        batch = batch.sort_values(["ts", "id"])
-        for row in batch.itertuples(index=False):
-            box = (int(row.x1), int(row.y1), int(row.x2), int(row.y2))
-            iou_prev = _iou(box, prev) if prev is not None else 0.0
-            suppressed = iou_prev > IOU_THRESHOLD
-            if not suppressed:
-                accumulated += int(row.new_count)
-            out.append(
-                {
-                    "camera_id": camera_id,
-                    "id": int(row.id),
-                    "ts": row.ts,
-                    "new_count": int(row.new_count),
-                    "iou_prev": float(iou_prev),
-                    "suppressed": bool(suppressed),
-                    "accumulated_count": accumulated,
-                }
-            )
-            prev = box
+    batch = _sorted_batch(pdfs, ("new_count", *_BOX))
+    out = None
+    if batch is not None:
+        box = np.column_stack([batch[c] for c in _BOX]).astype(np.int64)
+        iou = _iou(box, np.vstack([np.asarray(prev, np.int64), box[:-1]]))
+        suppressed = iou > IOU_THRESHOLD
+        new_count = batch["new_count"].astype(np.int64)
+        acc = accumulated + np.cumsum(np.where(suppressed, 0, new_count))
+        out = pd.DataFrame(
+            {
+                "camera_id": [camera_id] * len(box),
+                "id": batch["id"].astype(np.int64),
+                "ts": batch["ts"],
+                "new_count": new_count,
+                "iou_prev": iou,
+                "suppressed": suppressed,
+                "accumulated_count": acc,
+            }
+        )
+        prev, accumulated, has_prev = box[-1].tolist(), int(acc[-1]), True
 
-    if prev is not None:
-        state.update((prev[0], prev[1], prev[2], prev[3], accumulated, True))
-    else:
-        state.update((0, 0, 0, 0, accumulated, False))
-    if out:
-        yield pd.DataFrame(out)
+    state.update((*prev, accumulated, has_prev))
+    if out is not None:
+        yield out
+
+
+def _keyed_input(stream: DataFrame, *names: str) -> GroupedData:
+    """``stream`` cut down to what a state function reads, grouped by
+    camera_id. applyInPandasWithState converts every input column of
+    every (camera, micro-batch) group to pandas, a fixed cost that
+    outweighs the kernels here when groups are small, so only the read
+    columns are sent, and ``ts`` goes as TIMESTAMP_NTZ: the same
+    session-local wall clock pyspark hands over for a TIMESTAMP, without
+    its time-zone conversion per group."""
+    ts = F.col("ts").cast(T.TimestampNTZType()).alias("ts")
+    return stream.select("camera_id", ts, "id", *names).groupBy("camera_id")
 
 
 def stateful_dedup(stream: DataFrame) -> DataFrame:
     """Wire the state function onto a (possibly streaming) detection
     frame keyed by camera_id."""
-    return stream.groupBy("camera_id").applyInPandasWithState(
+    return _keyed_input(stream, "new_count", *_BOX).applyInPandasWithState(
         dedup_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -155,38 +187,53 @@ _EPISODE_STATE_SCHEMA = T.StructType(
 
 
 def _fold_episodes(cur, pdfs):
-    """The episode fold: buffer the whole micro-batch and sort ONCE —
-    Arrow delivers a group as multiple chunks in no guaranteed order,
-    so per-chunk sorting would mis-segment episodes whenever a batch
-    spans chunks. Returns (open_episode_or_None, closed_episode_tuples)."""
-    chunks = list(pdfs)
-    if not chunks:  # state fn can fire without rows (e.g. timeout modes)
+    """The episode fold as run-length segmentation of the sorted
+    micro-batch over ``new_count >= EPISODE_THRESHOLD``: a high run
+    starting at row 0 extends the open episode ``cur``; every high run
+    that a low row ends closes; a trailing high run stays open.
+    Returns (open_episode_or_None, closed_episode_tuples), each episode
+    (start_us, end_us, n_obs, peak, total) of Python ints."""
+    batch = _sorted_batch(pdfs, ("new_count",))
+    if batch is None:  # state fn can fire without rows (e.g. timeout modes)
         return cur, []
-    batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "id"])
-    closed: list[tuple] = []
-    for ts, nc in zip(batch["ts"], batch["new_count"]):
-        us = ts.value // 1000  # pandas ns → µs (exact integers)
-        nc = int(nc)
-        if nc >= EPISODE_THRESHOLD:
-            if cur is None:
-                cur = (us, us, 1, nc, nc)
-            else:
-                cur = (cur[0], us, cur[2] + 1, max(cur[3], nc), cur[4] + nc)
-        elif cur is not None:
-            closed.append(cur)
-            cur = None
-    return cur, closed
+    us = batch["ts"].astype("datetime64[ns]").view(np.int64) // 1000
+    nc = batch["new_count"].astype(np.int64)
+    rows = np.flatnonzero(nc >= EPISODE_THRESHOLD)
+    if not len(rows):  # row 0 is low: it closes the open episode
+        return None, [] if cur is None else [cur]
+    # each run's first and last position in ``rows``: a run starts
+    # where the row index jumps
+    first = np.flatnonzero(np.diff(rows, prepend=-2) != 1)
+    last = np.append(first[1:] - 1, len(rows) - 1)
+    episodes = list(
+        zip(
+            us[rows[first]].tolist(),
+            us[rows[last]].tolist(),
+            (last - first + 1).tolist(),
+            np.maximum.reduceat(nc[rows], first).tolist(),
+            np.add.reduceat(nc[rows], first).tolist(),
+        )
+    )
+    if cur is not None and rows[0] == 0:
+        _, end, n, peak, total = episodes[0]
+        episodes[0] = (cur[0], end, cur[2] + n, max(cur[3], peak), cur[4] + total)
+    elif cur is not None:
+        episodes.insert(0, cur)
+    if rows[-1] == len(nc) - 1:
+        return episodes[-1], episodes[:-1]
+    return None, episodes
 
 
 def _closed_frame(camera_id, closed):
+    start_us, end_us, n_obs, peak, total = np.array(closed, np.int64).reshape(-1, 5).T
     return pd.DataFrame(
         {
             "camera_id": [camera_id] * len(closed),
-            "episode_start": [pd.Timestamp(c[0] * 1000) for c in closed],
-            "episode_end": [pd.Timestamp(c[1] * 1000) for c in closed],
-            "n_obs": [c[2] for c in closed],
-            "peak": [c[3] for c in closed],
-            "total": [c[4] for c in closed],
+            "episode_start": (start_us * 1000).astype("datetime64[ns]"),
+            "episode_end": (end_us * 1000).astype("datetime64[ns]"),
+            "n_obs": n_obs,
+            "peak": peak,
+            "total": total,
         }
     )
 
@@ -212,7 +259,7 @@ def episodes_fn(
 
 
 def congestion_episodes(stream: DataFrame) -> DataFrame:
-    return stream.groupBy("camera_id").applyInPandasWithState(
+    return _keyed_input(stream, "new_count").applyInPandasWithState(
         episodes_fn,
         outputStructType=EPISODE_OUTPUT_SCHEMA,
         stateStructType=_EPISODE_STATE_SCHEMA,

@@ -365,6 +365,255 @@ def test_fold_episodes_all_high_batch_keeps_episode_open():
     assert (cur, closed) == ((_us(0), _us(2), 3, 700, 1301), [])
 
 
+class _FakeGroupState:
+    """The slice of pyspark's GroupState the state functions use."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+# Reference loops: the per-row state functions that the column kernels
+# in streaming/state.py replaced, kept as the behaviour they must match.
+
+
+def _ref_iou(a, b):
+    ix = max(0, min(a[2], b[2]) - max(a[0], b[0]))
+    iy = max(0, min(a[3], b[3]) - max(a[1], b[1]))
+    inter = ix * iy
+    union = (a[2] - a[0]) * (a[3] - a[1]) + (b[2] - b[0]) * (b[3] - b[1]) - inter
+    return inter / union if union > 0 else 0.0
+
+
+def _ref_dedup_fn(key, pdfs, st):
+    import pandas as pd
+
+    (camera_id,) = key
+    if st.exists:
+        x1, y1, x2, y2, accumulated, has_prev = st.get
+        prev = (x1, y1, x2, y2) if has_prev else None
+    else:
+        prev, accumulated = None, 0
+    out = []
+    chunks = list(pdfs)
+    batch = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
+    if len(batch):
+        batch = batch.sort_values(["ts", "id"])
+        for row in batch.itertuples(index=False):
+            box = (int(row.x1), int(row.y1), int(row.x2), int(row.y2))
+            iou_prev = _ref_iou(box, prev) if prev is not None else 0.0
+            suppressed = iou_prev > state.IOU_THRESHOLD
+            if not suppressed:
+                accumulated += int(row.new_count)
+            out.append(
+                {
+                    "camera_id": camera_id,
+                    "id": int(row.id),
+                    "ts": row.ts,
+                    "new_count": int(row.new_count),
+                    "iou_prev": float(iou_prev),
+                    "suppressed": bool(suppressed),
+                    "accumulated_count": accumulated,
+                }
+            )
+            prev = box
+    if prev is not None:
+        st.update((prev[0], prev[1], prev[2], prev[3], accumulated, True))
+    else:
+        st.update((0, 0, 0, 0, accumulated, False))
+    if out:
+        yield pd.DataFrame(out)
+
+
+def _ref_fold_episodes(cur, pdfs):
+    import pandas as pd
+
+    chunks = list(pdfs)
+    if not chunks:
+        return cur, []
+    batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "id"])
+    closed = []
+    for ts, nc in zip(batch["ts"], batch["new_count"]):
+        us = ts.value // 1000
+        nc = int(nc)
+        if nc >= state.EPISODE_THRESHOLD:
+            if cur is None:
+                cur = (us, us, 1, nc, nc)
+            else:
+                cur = (cur[0], us, cur[2] + 1, max(cur[3], nc), cur[4] + nc)
+        elif cur is not None:
+            closed.append(cur)
+            cur = None
+    return cur, closed
+
+
+def _ref_closed_frame(camera_id, closed):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "camera_id": [camera_id] * len(closed),
+            "episode_start": [pd.Timestamp(c[0] * 1000) for c in closed],
+            "episode_end": [pd.Timestamp(c[1] * 1000) for c in closed],
+            "n_obs": [c[2] for c in closed],
+            "peak": [c[3] for c in closed],
+            "total": [c[4] for c in closed],
+        }
+    )
+
+
+def _ref_episodes_fn(key, pdfs, st):
+    (camera_id,) = key
+    cur = None
+    if st.exists:
+        start_us, end_us, n_obs, peak, total, is_open = st.get
+        if is_open:
+            cur = (start_us, end_us, n_obs, peak, total)
+    cur, closed = _ref_fold_episodes(cur, pdfs)
+    st.update((0, 0, 0, 0, 0, False) if cur is None else (*cur, True))
+    if closed:
+        yield _ref_closed_frame(camera_id, closed)
+
+
+def _random_batch(rng, n, shape):
+    """One micro-batch of ``n`` detections: few distinct minutes (so
+    ``ts`` ties are broken by ``id``), small overlapping boxes (some
+    empty or inverted, some at negative coordinates) and counts around
+    the episode threshold. ``shape`` forces every count high or low."""
+    import numpy as np
+    import pandas as pd
+
+    x1 = rng.integers(-2, 2, n)
+    y1 = rng.integers(-2, 2, n)
+
+    def extent():  # mostly 4-5 wide; one in ten empty or inverted
+        return np.where(rng.random(n) < 0.1, rng.integers(-1, 1, n), rng.integers(4, 6, n))
+
+    lo, hi = {"mixed": (0, 600), "high": (300, 600), "low": (0, 300)}[shape]
+    return pd.DataFrame(
+        {
+            "ts": pd.Timestamp("2024-01-01")
+            + pd.to_timedelta(rng.integers(-3, 6, n), unit="min"),
+            "id": rng.permutation(10 * n)[:n].astype(np.int64),
+            "new_count": rng.integers(lo, hi, n),
+            "x1": x1,
+            "y1": y1,
+            "x2": x1 + extent(),
+            "y2": y1 + extent(),
+        }
+    )
+
+
+def _chunks(rng, batch, reverse):
+    """The batch split into Arrow-like chunks, optionally handed over in
+    reverse order with reversed rows."""
+    n = len(batch)
+    cuts = sorted(rng.choice(range(1, n), min(2, n - 1), replace=False)) if n > 1 else []
+    parts = [batch.iloc[a:b].reset_index(drop=True) for a, b in zip([0, *cuts], [*cuts, n])]
+    if reverse:
+        parts = [p.iloc[::-1].reset_index(drop=True) for p in parts[::-1]]
+    return parts
+
+
+def _run_state_fn(fn, st, chunks):
+    outs = list(fn(("cam-1",), iter(chunks), st))
+    assert len(outs) <= 1
+    return outs[0] if outs else None
+
+
+_EQUIVALENCE_CASES = [
+    (seed, n, shape, reverse)
+    for seed in range(4)
+    for n, shape in ((1, "mixed"), (1, "high"), (1, "low"), (7, "high"), (7, "low"), (30, "mixed"), (200, "mixed"))
+    for reverse in (False, True)
+]
+
+
+@pytest.mark.parametrize("prior", ["none", "open", "closed"])
+def test_state_kernels_match_reference_loops(prior):
+    """The column kernels reproduce the per-row loops they replaced
+    exactly: output frames (values, dtypes, column order) and state
+    tuples, over chained micro-batches with ts ties, single-row,
+    all-high and all-low batches, chunks handed over in reverse, and
+    with or without prior state. Spark-free."""
+    import numpy as np
+    import pandas as pd
+
+    for seed, n, shape, reverse in _EQUIVALENCE_CASES:
+        rng = np.random.default_rng(1000 * seed + n)
+        dedup_state = {
+            "none": None,
+            "open": (3, 2, 11, 9, 42, True),
+            "closed": (0, 0, 0, 0, 17, False),
+        }[prior]
+        episode_state = {
+            "none": None,
+            "open": (-5_000_000, -1_000_000, 2, 450, 800, True),
+            "closed": (0, 0, 0, 0, 0, False),
+        }[prior]
+        got_d, want_d = _FakeGroupState(dedup_state), _FakeGroupState(dedup_state)
+        got_e, want_e = _FakeGroupState(episode_state), _FakeGroupState(episode_state)
+        for _ in range(3):  # chained micro-batches carry state across seams
+            batch = _random_batch(rng, n, shape)
+            chunks = _chunks(rng, batch, reverse)
+            case = (seed, n, shape, reverse, prior)
+            for fn, ref, got_st, want_st in (
+                (state.dedup_fn, _ref_dedup_fn, got_d, want_d),
+                (state.episodes_fn, _ref_episodes_fn, got_e, want_e),
+            ):
+                got = _run_state_fn(fn, got_st, chunks)
+                want = _run_state_fn(ref, want_st, chunks)
+                assert (got is None) == (want is None), case
+                if want is not None:
+                    pd.testing.assert_frame_equal(got, want, check_exact=True, obj=str(case))
+                assert got_st.value == want_st.value, case
+                assert all(type(v) in (int, bool) for v in got_st.value), case
+
+
+def test_dedup_suppressed_row_is_prev_across_batch_seam():
+    """Planted seam: the last row of micro-batch 1 is SUPPRESSED, yet it
+    is still ``prev`` for the first row of micro-batch 2 — through the
+    state tuple and the next batch's ``iou_prev``. Box C overlaps the
+    suppressed box B at IoU 2/3 (suppressed) but the last unsuppressed
+    box A at only 3/7. Spark-free."""
+    import pandas as pd
+
+    def rows(*r):
+        return pd.DataFrame(
+            {
+                "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=m) for m, *_ in r],
+                "id": [i for _, i, *_ in r],
+                "new_count": [n for _, _, n, _ in r],
+                "x1": [b[0] for *_, b in r],
+                "y1": [b[1] for *_, b in r],
+                "x2": [b[2] for *_, b in r],
+                "y2": [b[3] for *_, b in r],
+            }
+        )
+
+    st = _FakeGroupState()
+    a, b, c = (0, 0, 10, 10), (2, 0, 12, 10), (4, 0, 14, 10)
+    out1 = _run_state_fn(state.dedup_fn, st, [rows((0, 1, 5, a), (1, 2, 7, b))])
+    assert out1["suppressed"].tolist() == [False, True]
+    assert out1["accumulated_count"].tolist() == [5, 5]
+    assert st.value == (2, 0, 12, 10, 5, True)
+    out2 = _run_state_fn(state.dedup_fn, st, [rows((2, 3, 11, c))])
+    assert out2["iou_prev"].tolist() == [80 / 120]
+    assert out2["suppressed"].tolist() == [True]
+    assert out2["accumulated_count"].tolist() == [5]
+    assert st.value == (4, 0, 14, 10, 5, True)
+
+
 def test_env_int_treats_non_positive_as_unset(monkeypatch):
     """Malformed partition knobs mean "unset" (derivation engages),
     never a 1-partition pin. Spark-free."""
@@ -569,6 +818,51 @@ def test_query_listener_observes_progress(spark, sf_dir):
         assert sum(rows_seen) == total_rows, (
             f"progress rows {sum(rows_seen)} != input rows {total_rows}"
         )
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_python_stateful_drains_size_state_by_input_rows(spark, sf_dir):
+    """Both applyInPandasWithState drains size their state store by
+    staged input rows like every other drain: at sf0.001 each
+    micro-batch reports ONE state partition (one Python task) to a
+    StreamingQueryListener, not the session's shuffle-partition count."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from big_data_traffict_prediction_spark.streaming import queries
+
+    parts: dict[str, set[int]] = {}
+
+    class Capture(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.stateOperators:
+                prefix = p.name.rsplit("_", 1)[0]
+                parts.setdefault(prefix, set()).add(p.stateOperators[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Capture()
+    spark.streams.addListener(listener)
+    try:
+        queries.q_stream_iou_dedup(spark, sf_dir)
+        queries.q_stream_congestion_episodes(spark, sf_dir)
+        want = {"q_stream_dedup": {1}, "q_stream_episodes": {1}}
+        # listener delivery is asynchronous
+        for _ in range(20):
+            if parts.keys() >= want.keys():
+                break
+            time.sleep(0.5)
+        assert parts == want
     finally:
         spark.streams.removeListener(listener)
 
