@@ -21,7 +21,6 @@ per-row reference loops live in the tests.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -71,16 +70,16 @@ def _iou(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.divide(inter, union, out=np.zeros(len(a)), where=union > 0)
 
 
-def _sorted_batch(pdfs: Iterator[pd.DataFrame], names: tuple[str, ...]) -> dict[str, np.ndarray] | None:
-    """Columns ``ts``, ``id`` and ``names`` of one group's whole
-    micro-batch as numpy arrays, sorted ONCE by (ts, id): Arrow
+def _sorted_batch(pdfs: Iterator[pd.DataFrame], *names: str) -> dict[str, np.ndarray] | None:
+    """Columns ``ts``, ``id``, ``new_count`` and ``names`` of one group's
+    whole micro-batch as numpy arrays, sorted ONCE by (ts, id): Arrow
     delivers a group as multiple chunks in no guaranteed order, so
     per-chunk sorting would pick the wrong predecessor across chunk
     seams. None when the state function fires without rows."""
     chunks = [c for c in pdfs if len(c)]
     if not chunks:
         return None
-    batch = {n: np.concatenate([c[n].to_numpy() for c in chunks]) for n in ("ts", "id", *names)}
+    batch = {n: np.concatenate([c[n].to_numpy() for c in chunks]) for n in ("ts", "id", "new_count", *names)}
     order = np.lexsort((batch["id"], batch["ts"]))
     return {n: col[order] for n, col in batch.items()}
 
@@ -102,7 +101,7 @@ def dedup_fn(
         if has_prev:
             prev = [x1, y1, x2, y2]
 
-    batch = _sorted_batch(pdfs, ("new_count", *_BOX))
+    batch = _sorted_batch(pdfs, *_BOX)
     out = None
     if batch is not None:
         box = np.column_stack([batch[c] for c in _BOX]).astype(np.int64)
@@ -129,21 +128,21 @@ def dedup_fn(
 
 
 def _keyed_input(stream: DataFrame, *names: str) -> GroupedData:
-    """``stream`` cut down to what a state function reads, grouped by
-    camera_id. applyInPandasWithState converts every input column of
+    """``stream`` cut down to what a state function reads (camera_id,
+    ts, id, new_count and ``names``), grouped by camera_id. applyInPandasWithState converts every input column of
     every (camera, micro-batch) group to pandas, a fixed cost that
     outweighs the kernels here when groups are small, so only the read
     columns are sent, and ``ts`` goes as TIMESTAMP_NTZ: the same
     session-local wall clock pyspark hands over for a TIMESTAMP, without
     its time-zone conversion per group."""
     ts = F.col("ts").cast(T.TimestampNTZType()).alias("ts")
-    return stream.select("camera_id", ts, "id", *names).groupBy("camera_id")
+    return stream.select("camera_id", ts, "id", "new_count", *names).groupBy("camera_id")
 
 
 def stateful_dedup(stream: DataFrame) -> DataFrame:
     """Wire the state function onto a (possibly streaming) detection
     frame keyed by camera_id."""
-    return _keyed_input(stream, "new_count", *_BOX).applyInPandasWithState(
+    return _keyed_input(stream, *_BOX).applyInPandasWithState(
         dedup_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -193,7 +192,7 @@ def _fold_episodes(cur, pdfs):
     that a low row ends closes; a trailing high run stays open.
     Returns (open_episode_or_None, closed_episode_tuples), each episode
     (start_us, end_us, n_obs, peak, total) of Python ints."""
-    batch = _sorted_batch(pdfs, ("new_count",))
+    batch = _sorted_batch(pdfs)
     if batch is None:  # state fn can fire without rows (e.g. timeout modes)
         return cur, []
     us = batch["ts"].astype("datetime64[ns]").view(np.int64) // 1000
@@ -225,7 +224,7 @@ def _fold_episodes(cur, pdfs):
 
 
 def _closed_frame(camera_id, closed):
-    start_us, end_us, n_obs, peak, total = np.array(closed, np.int64).reshape(-1, 5).T
+    start_us, end_us, n_obs, peak, total = np.array(closed, np.int64).T
     return pd.DataFrame(
         {
             "camera_id": [camera_id] * len(closed),
@@ -259,7 +258,7 @@ def episodes_fn(
 
 
 def congestion_episodes(stream: DataFrame) -> DataFrame:
-    return _keyed_input(stream, "new_count").applyInPandasWithState(
+    return _keyed_input(stream).applyInPandasWithState(
         episodes_fn,
         outputStructType=EPISODE_OUTPUT_SCHEMA,
         stateStructType=_EPISODE_STATE_SCHEMA,
