@@ -80,6 +80,9 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame], *names: str) -> dict[str, np.nda
     if not chunks:
         return None
     batch = {n: np.concatenate([c[n].to_numpy() for c in chunks]) for n in ("ts", "id", "new_count", *names)}
+    nulls = [n for n, col in batch.items() if col.dtype.kind == "f"]  # NULL turns a long column to float
+    if nulls:
+        raise ValueError(f"NULL in state function input column(s) {nulls}")
     order = np.lexsort((batch["id"], batch["ts"]))
     return {n: col[order] for n, col in batch.items()}
 

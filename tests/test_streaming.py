@@ -580,6 +580,24 @@ def test_state_kernels_match_reference_loops(prior):
                 assert all(type(v) in (int, bool) for v in got_st.value), case
 
 
+@pytest.mark.parametrize(
+    "fn, column",
+    [(state.dedup_fn, c) for c in ("id", "new_count", "x1")]
+    + [(state.episodes_fn, c) for c in ("id", "new_count")],
+)
+def test_state_kernels_reject_null_input(fn, column):
+    """A NULL in a long column reaches pandas as NaN in a float column.
+    The kernels raise on it, as the per-row dedup loop did (``int(nan)``),
+    instead of casting NaN to an arbitrary integer. Spark-free."""
+    import numpy as np
+
+    batch = _random_batch(np.random.default_rng(0), 5, "mixed")
+    batch[column] = batch[column].astype(float)
+    batch.loc[2, column] = np.nan
+    with pytest.raises(ValueError, match=column):
+        _run_state_fn(fn, _FakeGroupState(), [batch])
+
+
 def test_dedup_suppressed_row_is_prev_across_batch_seam():
     """Planted seam: the last row of micro-batch 1 is SUPPRESSED, yet it
     is still ``prev`` for the first row of micro-batch 2 — through the
