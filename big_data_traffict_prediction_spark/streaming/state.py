@@ -132,12 +132,14 @@ def dedup_fn(
 
 def _keyed_input(stream: DataFrame, *names: str) -> GroupedData:
     """``stream`` cut down to what a state function reads (camera_id,
-    ts, id, new_count and ``names``), grouped by camera_id. applyInPandasWithState converts every input column of
-    every (camera, micro-batch) group to pandas, a fixed cost that
-    outweighs the kernels here when groups are small, so only the read
-    columns are sent, and ``ts`` goes as TIMESTAMP_NTZ: the same
-    session-local wall clock pyspark hands over for a TIMESTAMP, without
-    its time-zone conversion per group."""
+    ts, id, new_count and ``names``), grouped by camera_id.
+
+    applyInPandasWithState converts every input column of every
+    (camera, micro-batch) group to pandas, a fixed cost that outweighs
+    the kernels here when groups are small, so only the read columns
+    are sent, and ``ts`` goes as TIMESTAMP_NTZ: the same session-local
+    wall clock pyspark hands over for a TIMESTAMP, without its
+    time-zone conversion per group."""
     ts = F.col("ts").cast(T.TimestampNTZType()).alias("ts")
     return stream.select("camera_id", ts, "id", "new_count", *names).groupBy("camera_id")
 
